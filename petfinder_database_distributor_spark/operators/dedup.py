@@ -48,8 +48,11 @@ def anti_join_new_keys(
 ) -> DataFrame:
     """F4 — rows of ``new`` whose key is absent from ``existing``. The
     reference checks membership BEFORE the expensive fetch (server.py:200-203,
-    optimization O1) — callers must place this upstream of fetch UDFs; Catalyst
-    will not reorder around an opaque Python UDF."""
+    optimization O1) — callers must place this upstream of fetch UDFs. The
+    fetch stays above the join only because :mod:`..sources.fetch` declares
+    its UDF nondeterministic: a deterministic Python UDF is not opaque to
+    Catalyst, which copies filters on its output across the anti join
+    (constraint inference) and pushes them below it, onto both inputs."""
     keys = existing.select(*key_cols).dropDuplicates(list(key_cols))
     if broadcast_existing:
         keys = F.broadcast(keys)

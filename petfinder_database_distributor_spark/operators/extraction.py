@@ -28,6 +28,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from petfinder_database_distributor_spark.util import pushdown_barrier
+
 
 def xpath_columns(
     df: DataFrame,
@@ -271,7 +273,12 @@ def html_first_text_columns(
             yield pd.DataFrame(rows, columns=aliases)
 
     udf = F.pandas_udf(extract, out_type)
-    ext = df.select(*[F.col(c) for c in keep], udf(F.col(html_col)).alias("__ext"))
+    # Barrier: a caller's filter on an extracted column would otherwise be
+    # pushed below this projection with the UDF call inlined into it, and
+    # every document would be parsed twice (once to filter, once to project).
+    ext = df.select(
+        *[F.col(c) for c in keep], pushdown_barrier(udf(F.col(html_col))).alias("__ext")
+    )
     return ext.select(
         *[F.col(c) for c in keep],
         *[F.col(f"__ext.{a}").alias(a) for a in aliases],

@@ -6,7 +6,11 @@ wait knobs: ``link_scraper.py:28-63``). In Spark the fetch is executor-side
 work inside a pandas UDF, so a million URLs fan out across the cluster
 while the plan stays declarative — and the O1 plan shape (anti-join BEFORE
 the fetch, ``server.py:200-203``) keeps the expensive UDF off already-known
-keys.
+keys. That holds because the fetch UDF is declared nondeterministic (a live
+fetch is not a pure function of its URL): Catalyst then neither pushes
+filters on the fetched document below the fetch, where they would fetch
+each row a second time, nor infers copies of them across the anti join,
+where they would fetch the committed rows the anti join exists to skip.
 
 Determinism: live HTTP is out of correctness scope (SURVEY.md §7.3.6), so
 the default fetcher synthesizes a page from the URL alone — byte-stable,
@@ -76,7 +80,9 @@ def make_fetch_udf(
     """Build the fetch pandas UDF: url → document (null on failure).
 
     Arrow-batched (one pandas Series per batch, not per-row Python calls);
-    the closure is self-contained so executors unpickle it by value."""
+    the closure is self-contained so executors unpickle it by value.
+    Declared nondeterministic, so the optimizer evaluates it exactly where
+    the plan places it (module docstring)."""
 
     def fetch_series(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
         import time as _time
@@ -100,7 +106,7 @@ def make_fetch_udf(
         for s in batches:
             yield s.map(one)
 
-    return F.pandas_udf(fetch_series, T.StringType())
+    return F.pandas_udf(fetch_series, T.StringType()).asNondeterministic()
 
 
 def fetch_documents(url_col: Column, fetcher: Callable[[str], str] = fixture_fetch,

@@ -204,10 +204,88 @@ def test_simhash_tokenizer_splits_ascii_whitespace_only(spark):
 
 
 def test_ingest_frontend_anti_join_before_fetch(spark):
-    # O1 plan shape: the key-dedup/anti-join runs on cheap columns; no
-    # Python UDF (fetch) appears upstream of the anti join in this plan.
+    # O1 plan shape, front half only: enumerate → fan-out → key-dedup →
+    # anti-join against the known keys, all on cheap columns. This plan
+    # stops before any fetch, so it only checks that the anti join is
+    # planned; that fetch and extraction stay above the join once they are
+    # added is pinned by test_ingest_fetch_extract_once_above_anti_join.
     p = plan_of(spark, "ingest_frontend")
     assert "LeftAnti" in p
+
+
+def _physical_nodes(node):
+    """Pre-order walk of a physical plan through py4j, entering the
+    not-yet-executed plan an AdaptiveSparkPlan wraps."""
+    if node.nodeName() == "AdaptiveSparkPlan":
+        node = node.executedPlan()
+    yield node
+    children = node.children()
+    for i in range(children.size()):
+        yield from _physical_nodes(children.apply(i))
+
+
+def _udf_evals(node, udf_name: str) -> int:
+    """How many ArrowEvalPython nodes under ``node`` evaluate ``udf_name``."""
+    return sum(
+        f"{udf_name}(" in n.simpleString(1000)
+        for n in _physical_nodes(node)
+        if n.nodeName() == "ArrowEvalPython"
+    )
+
+
+def test_ingest_fetch_extract_once_above_anti_join(spark):
+    """O1 (server.py:200-203) over the whole scrape front end: links →
+    anti join against the committed keys → fetch → extract → placeholder
+    and null-ratio filters. The filters are functions of
+    extract(fetch(link)); were the fetch deterministic, constraint
+    inference would copy them across the LeftAnti onto the committed side
+    and push them below the join, fetching and parsing every committed
+    row and every fanned-out link. The fetch UDF is declared
+    nondeterministic and the extraction struct sits behind a pushdown
+    barrier, so each UDF runs once, on fresh keys only."""
+    from pyspark.sql import functions as F
+
+    from petfinder_database_distributor_spark.operators.dedup import anti_join_new_keys
+    from petfinder_database_distributor_spark.operators.extraction import (
+        html_first_text_columns,
+    )
+    from petfinder_database_distributor_spark.operators.filters import (
+        null_ratio_filter,
+        placeholder_name_filter,
+    )
+    from petfinder_database_distributor_spark.sources.fetch import fetch_documents
+
+    links = spark.range(1, 25).select(
+        F.concat(F.lit("https://www.petfinder.com/pet/"), F.col("id").cast("string")).alias("link")
+    )
+    committed = links.filter(F.col("link").endswith("0")).localCheckpoint()
+    fresh = anti_join_new_keys(links, committed, ["link"])
+    pages = fresh.withColumn("doc", fetch_documents(F.col("link")))
+    fields = ("name", "age", "gender")
+    extracted = html_first_text_columns(
+        pages, "doc", {f: f"pet {f}" for f in fields}, keep=("link",)
+    )
+    valid = null_ratio_filter(placeholder_name_filter(extracted), fields)
+
+    plan = valid._jdf.queryExecution().executedPlan()
+    (anti,) = [
+        n for n in _physical_nodes(plan) if "LeftAnti" in n.simpleString(1000)
+    ]
+    committed_side = _physical_nodes(anti.children().apply(1))
+    assert not [n for n in committed_side if n.nodeName() == "ArrowEvalPython"], (
+        "a Python UDF runs on the committed side of the anti join"
+    )
+    assert _udf_evals(plan, "fetch_series") == 1
+    assert _udf_evals(plan, "extract") == 1
+    assert valid.count() == 22  # 24 links, 2 committed; none dropped
+
+
+def test_s1_fetch_extract_fetches_once_per_row(spark):
+    # the T7 `html IS NOT NULL` filter must not be pushed below the fetch
+    assert _udf_evals(
+        SPECS["s1_fetch_extract"].fn(spark, SF_SMALL)._jdf.queryExecution().executedPlan(),
+        "fetch_series",
+    ) == 1
 
 
 def test_bucketed_join_has_no_exchange(spark):

@@ -1025,8 +1025,12 @@ def test_bloom_point_lookup_prunes_and_stays_exact(spark, table_dir):
     )
 
     n = 4000
+    # A fixed input layout (8 slices of 500 ids): round-robin's file
+    # assignment depends on it, and spark.range(n) would slice by
+    # defaultParallelism, i.e. the core count, so "zone maps keep all 8
+    # files" below held at some core counts and not at others.
     df = (
-        spark.range(n)
+        spark.range(0, n, 1, 8)
         .selectExpr("id * 2654435761 % 1000003 AS k", "id AS payload")
         .repartition(8)
     )
